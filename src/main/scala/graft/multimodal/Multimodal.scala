@@ -319,9 +319,9 @@ object Multimodal {
     *
     * Implemented with Dataset.mapPartitions + Encoders.row (NOT `.rdd`,
     * which forces batch execution — illegal on streaming plans — and
-    * severs Catalyst lineage), mirroring ProtobufWire.decodeWith: the same
-    * operator serves parquet batch frames and `readStream` pipelines
-    * (MultimodalStreamingSpec runs it over a MemoryStream).
+    * severs Catalyst lineage), so the same operator serves parquet batch
+    * frames and `readStream` pipelines (MultimodalStreamingSpec runs it
+    * over a MemoryStream).
     */
   def extractFeatures(df: DataFrame, idCol: String, mediaCol: String,
       batchSize: Int = 64): DataFrame = {

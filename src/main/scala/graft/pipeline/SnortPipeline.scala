@@ -23,12 +23,11 @@ object SnortPipeline {
   def explodeMetrics(events: DataFrame): DataFrame =
     events.select(col("*"), explode(col("metrics")).as("m")).drop("metrics")
 
-  /** Event+metric → flat SnortAlert projection.
-    * Mapping: internal/processor/processor.go:31-93; output field names from
-    * the struct's json tags, internal/types/types.go:27-188. Column order
-    * follows types.go declaration order.
+  /** Columns that depend on the event alone, built once per event before
+    * the explode rather than once per alert: the `metadata` struct (three
+    * timestamp formats) and the priority label.
     */
-  val alertColumns: Seq[Column] = Seq(
+  private val perEventColumns: Seq[Column] = Seq(
     struct(
       col("sensor_id").as("sensor_id"),
       col("sensor_version").as("sensor_version"),
@@ -37,6 +36,16 @@ object SnortPipeline {
       Scalars.isoMicrosTrimmed(col("event_read_at")).as("read_at"),
       Scalars.isoMicrosTrimmed(col("event_received_at")).as("received_at")
     ).as("metadata"),
+    Scalars.priorityLabel(col("snort_priority")).as("priority_str"))
+
+  /** Event+metric → flat SnortAlert projection, over the exploded rows
+    * carrying [[perEventColumns]].
+    * Mapping: internal/processor/processor.go:31-93; output field names from
+    * the struct's json tags, internal/types/types.go:27-188. Column order
+    * follows types.go declaration order.
+    */
+  val alertColumns: Seq[Column] = Seq(
+    col("metadata"),
     col("snort_action").as("action"),
     col("m.snort_base64_data").as("b64_data"),
     col("snort_classification").as("class"),
@@ -66,7 +75,7 @@ object SnortPipeline {
     col("m.snort_pkt_length").as("pkt_len"),
     col("m.snort_pkt_number").as("pkt_num"),
     col("snort_priority").as("priority"),
-    Scalars.priorityLabel(col("snort_priority")).as("priority_str"),
+    col("priority_str"),
     col("snort_protocol").as("proto"),
     col("snort_rule_rev").as("rev"),
     col("snort_rule").as("rule"),
@@ -93,7 +102,7 @@ object SnortPipeline {
 
   /** Full pipeline: SensorEvent batch → flat SnortAlert records. */
   def alerts(events: DataFrame): DataFrame =
-    explodeMetrics(events).select(alertColumns: _*)
+    explodeMetrics(events.select(col("*") +: perEventColumns: _*)).select(alertColumns: _*)
 
   /** Kafka producer envelope (internal/app/app.go:182-215): record key,
     * the four routing headers, and the true event-time record timestamp

@@ -2,9 +2,16 @@ package graft.streaming
 
 import graft.pipeline.SensorSchemas
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{
+  Expression, Generator, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 
 /** Hand-rolled protobuf wire-format codec for `SensorEvent`/`Metric`
@@ -47,8 +54,6 @@ object ProtobufWire {
     19 -> "snort_rule_sid", 20 -> "snort_rule", 21 -> "snort_seconds",
     22 -> "snort_service", 23 -> "snort_type_of_service")
 
-  // ---- wire primitives ----------------------------------------------------
-
   /** Thrown for truncated/corrupt payloads — callers route the record to
     * the malformed path instead of failing the task (a poison Kafka message
     * must not kill the stream; the reference counts failed events,
@@ -56,14 +61,109 @@ object ProtobufWire {
     */
   final class MalformedRecord(msg: String) extends RuntimeException(msg)
 
-  private final class Reader(buf: Array[Byte]) {
-    var pos = 0
-    def hasMore: Boolean = pos < buf.length
-    def readVarint(): Long = {
+  // ---- decode -------------------------------------------------------------
+
+  private final val Unknown = 0
+  private final val Str = 1
+  private final val Lng = 2
+  private final val Msg = 3
+
+  /** One message type's field table, indexed by field number: the row
+    * ordinal and value kind of each known field, and the row of defaults an
+    * absent field leaves behind (proto3 presence: plain scalars "" / 0,
+    * `optional` ones null).
+    */
+  private final class Layout(schema: StructType, fields: Map[Int, String]) {
+    val ordinal: Array[Int] = Array.fill(fields.keys.max + 1)(-1)
+    val kind: Array[Int] = new Array[Int](fields.keys.max + 1)
+    fields.foreach { case (num, name) =>
+      ordinal(num) = schema.fieldIndex(name)
+      kind(num) = schema(name).dataType match {
+        case StringType => Str
+        case LongType => Lng
+        case _: ArrayType => Msg
+        case other => throw new IllegalArgumentException(s"unsupported $other")
+      }
+    }
+    val defaults: Array[Any] = schema.fields.map { f =>
+      if (f.nullable) null
+      else if (f.dataType == StringType) UTF8String.EMPTY_UTF8
+      else 0L
+    }
+  }
+
+  private val eventLayout = new Layout(SensorSchemas.sensorEventSchema, eventFields)
+  private val metricLayout = new Layout(SensorSchemas.metricSchema, metricFields)
+  private val metricsOrdinal = SensorSchemas.sensorEventSchema.fieldIndex("metrics")
+
+  /** The decode kernel: reads one message from `buf` in place and writes
+    * each field straight into a row slot as a `UTF8String`, a long or (for
+    * `metrics`) an array of metric rows. Known fields are read ONLY when the
+    * record's wire type matches the expected one (2 for strings/messages, 0
+    * for varint longs); a mismatch is treated as an unknown field and
+    * skipped — proto3 conformance semantics, and it keeps a drifted producer
+    * schema from misreading a varint as a length. Holds its cursor between
+    * calls, so one instance serves one thread.
+    */
+  private final class Decoder {
+    private var buf: Array[Byte] = _
+    private var pos = 0
+    private var limit = 0
+    private val metrics = collection.mutable.ArrayBuffer[Any]()
+
+    def sensorEvent(bytes: Array[Byte], from: Int): InternalRow = {
+      buf = bytes; pos = from; limit = bytes.length
+      metrics.clear()
+      val row = message(eventLayout)
+      row.update(metricsOrdinal, new GenericArrayData(metrics.toArray))
+      row
+    }
+
+    def metric(bytes: Array[Byte]): InternalRow = {
+      buf = bytes; pos = 0; limit = bytes.length
+      message(metricLayout)
+    }
+
+    private def message(l: Layout): GenericInternalRow = {
+      val values = l.defaults.clone()
+      while (pos < limit) {
+        val tag = readVarint()
+        val field = tag >>> 3
+        // Go's protowire rejects field 0 and numbers past int32 as errors;
+        // truncating them to an Int would alias 2^32+5 onto field 5.
+        if (field == 0 || field > Int.MaxValue) throw new MalformedRecord(s"invalid field number $field")
+        val wireType = (tag & 7).toInt
+        val k = if (field < l.kind.length) l.kind(field.toInt) else Unknown
+        if (k == Str && wireType == 2) {
+          val n = readLen()
+          values(l.ordinal(field.toInt)) = utf8(n)
+          pos += n
+        } else if (k == Lng && wireType == 0) values(l.ordinal(field.toInt)) = readVarint()
+        else if (k == Msg && wireType == 2) {
+          val n = readLen()
+          val outer = limit
+          limit = pos + n
+          metrics += message(metricLayout)
+          limit = outer
+        } else skip(wireType)
+      }
+      new GenericInternalRow(values)
+    }
+
+    /** The `n` bytes at `pos` as a string, exactly as `new String(bytes,
+      * UTF_8)` reads them: valid UTF-8 is referenced in place (the row's
+      * consumer copies it), anything else gets U+FFFD replacement.
+      */
+    private def utf8(n: Int): UTF8String = {
+      val s = UTF8String.fromBytes(buf, pos, n)
+      if (s.isValid) s else UTF8String.fromString(new String(buf, pos, n, StandardCharsets.UTF_8))
+    }
+
+    private def readVarint(): Long = {
       var shift = 0
       var result = 0L
       while (shift <= 63) {
-        if (pos >= buf.length) throw new MalformedRecord("truncated varint")
+        if (pos >= limit) throw new MalformedRecord("truncated varint")
         val b = buf(pos); pos += 1
         result |= (b & 0x7fL) << shift
         if ((b & 0x80) == 0) return result
@@ -71,99 +171,37 @@ object ProtobufWire {
       }
       throw new MalformedRecord("varint exceeds 64 bits")
     }
-    def readLen(): Int = {
+
+    private def readLen(): Int = {
       val n = readVarint()
-      if (n < 0 || pos + n > buf.length) throw new MalformedRecord(s"bad length $n")
+      if (n < 0 || n > limit - pos) throw new MalformedRecord(s"bad length $n")
       n.toInt
     }
-    def readBytes(n: Int): Array[Byte] = {
-      if (n < 0 || pos + n > buf.length) throw new MalformedRecord(s"truncated bytes $n")
-      val out = java.util.Arrays.copyOfRange(buf, pos, pos + n)
+
+    private def advance(n: Int): Unit = {
       pos += n
-      out
+      if (pos > limit) throw new MalformedRecord(s"truncated fixed${n * 8}")
     }
-    def skip(wireType: Int): Unit = wireType match {
+
+    private def skip(wireType: Int): Unit = wireType match {
       case 0 => readVarint()
-      case 1 => pos += 8; if (pos > buf.length) throw new MalformedRecord("truncated fixed64")
-      case 2 =>
-        // NOT `pos += readLen()`: that reads the old pos before readLen()
-        // advances past the length varint, silently rewinding the cursor.
-        val n = readLen(); pos += n
-      case 5 => pos += 4; if (pos > buf.length) throw new MalformedRecord("truncated fixed32")
+      case 1 => advance(8)
+      case 2 => advance(readLen())
+      case 5 => advance(4)
       case other => throw new MalformedRecord(s"unsupported wire type $other")
     }
   }
 
-  private def writeVarint(out: ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0) {
-      out.write(((v & 0x7f) | 0x80).toInt)
-      v >>>= 7
-    }
-    out.write(v.toInt)
-  }
+  private lazy val eventToRow = CatalystTypeConverters.createToScalaConverter(SensorSchemas.sensorEventSchema)
+  private lazy val metricToRow = CatalystTypeConverters.createToScalaConverter(SensorSchemas.metricSchema)
 
-  private def writeTag(out: ByteArrayOutputStream, field: Int, wireType: Int): Unit =
-    writeVarint(out, (field.toLong << 3) | wireType)
-
-  private def writeString(out: ByteArrayOutputStream, field: Int, s: String): Unit = {
-    val bytes = s.getBytes(StandardCharsets.UTF_8)
-    writeTag(out, field, 2); writeVarint(out, bytes.length); out.write(bytes, 0, bytes.length)
-  }
-
-  // ---- decode -------------------------------------------------------------
-
-  private def decodeMessage(
-      bytes: Array[Byte],
-      schema: StructType,
-      fields: Map[Int, String],
-      metricsCollector: Option[collection.mutable.ArrayBuffer[Row]]): Row = {
-    val values = collection.mutable.Map[String, Any]()
-    val r = new Reader(bytes)
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      val fieldNum = (tag >>> 3).toInt
-      val wireType = (tag & 7).toInt
-      // Known fields are read ONLY when the record's wire type matches the
-      // expected one (2 for strings/messages, 0 for varint longs); a
-      // mismatch is treated as an unknown field and skipped — proto3
-      // conformance semantics, and it prevents a drifted producer schema
-      // from silently misreading a varint as a length (yielding wrong
-      // column values instead of a skip).
-      fields.get(fieldNum) match {
-        case Some("metrics") if wireType == 2 =>
-          metricsCollector.get += decodeMetric(r.readBytes(r.readLen()))
-        case Some(name) if name != "metrics" =>
-          schema(name).dataType match {
-            case StringType if wireType == 2 =>
-              values(name) = new String(r.readBytes(r.readLen()), StandardCharsets.UTF_8)
-            case LongType if wireType == 0 =>
-              values(name) = r.readVarint()
-            case StringType | LongType => r.skip(wireType) // wrong wire type → unknown
-            case other => throw new IllegalArgumentException(s"unsupported $other")
-          }
-        case _ => r.skip(wireType)
-      }
-    }
-    Row.fromSeq(schema.fields.map { f =>
-      values.get(f.name).getOrElse {
-        f.name match {
-          case "metrics" => metricsCollector.get.toSeq
-          // proto3 presence: plain scalars default, `optional` ones null
-          case _ if !f.nullable && f.dataType == StringType => ""
-          case _ if !f.nullable && f.dataType == LongType   => 0L
-          case _ => null
-        }
-      }
-    }.toIndexedSeq)
-  }
-
+  /** One metric message as a [[Row]] (the kernel, converted for specs). */
   def decodeMetric(bytes: Array[Byte]): Row =
-    decodeMessage(bytes, SensorSchemas.metricSchema, metricFields, None)
+    metricToRow(new Decoder().metric(bytes)).asInstanceOf[Row]
 
+  /** One SensorEvent message as a [[Row]] (the kernel, converted for specs). */
   def decodeSensorEvent(bytes: Array[Byte]): Row =
-    decodeMessage(bytes, SensorSchemas.sensorEventSchema, eventFields,
-      Some(collection.mutable.ArrayBuffer.empty[Row]))
+    eventToRow(new Decoder().sensorEvent(bytes, 0)).asInstanceOf[Row]
 
   /** Named failed-event counter, visible in the Spark UI / status API —
     * the engine's form of the reference's count-and-continue failed-event
@@ -173,77 +211,96 @@ object ProtobufWire {
   def malformedCounter(spark: org.apache.spark.sql.SparkSession): org.apache.spark.util.LongAccumulator =
     spark.sparkContext.longAccumulator("graft.protobuf.malformed_records")
 
-  /** DataFrame op: binary `valueCol` (already Confluent-stripped) →
-    * full SensorEvent rows. Implemented with Dataset.mapPartitions (NOT
-    * .rdd, which forces batch execution and is illegal on streaming plans),
-    * so the same operator serves batch frames and `readStream` pipelines.
-    * Malformed records are counted on `malformed` (when given) and dropped,
-    * mirroring the reference's count-and-continue handling of failed
-    * events (app.go:85-97) — poison Kafka messages must not kill the
-    * stream, but their rate must stay observable.
+  /** DataFrame op: binary `valueCol` (already Confluent-stripped) → full
+    * SensorEvent rows of [[SensorSchemas.sensorEventSchema]]. One generator
+    * expression ([[DecodeSensorEvent]]) that emits zero or one row per input,
+    * so the same plan serves batch frames and `readStream` pipelines.
+    * Malformed records and tombstones are counted on `malformed` (when
+    * given) and dropped, mirroring the reference's count-and-continue
+    * handling of failed events (app.go:85-97) — poison Kafka messages must
+    * not kill the stream, but their rate must stay observable.
     */
   def decode(
       df: DataFrame,
       valueCol: String,
       malformed: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
-    decodeWith(df, valueCol, malformed)(identity)
+    decodeColumn(df, valueCol, framed = false, malformed)
 
   /** Like [[decode]] but takes the raw Confluent-framed Kafka value and
-    * parses magic + schema id + message-indexes inside the same kernel
-    * (the indexes block is variable-length, so framing cannot be a static
-    * `substring`). Bad frames count as malformed too.
+    * finds the payload behind magic + schema id + message-indexes inside the
+    * same generator (the indexes block is variable-length, so framing cannot
+    * be a static `substring`). Bad frames count as malformed too.
     */
   def decodeFramed(
       df: DataFrame,
       valueCol: String,
       malformed: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
-    decodeWith(df, valueCol, malformed)(ConfluentFraming.stripBytes)
+    decodeColumn(df, valueCol, framed = true, malformed)
 
-  private def decodeWith(
+  private def decodeColumn(
       df: DataFrame,
       valueCol: String,
-      malformed: Option[org.apache.spark.util.LongAccumulator])(
-      unframe: Array[Byte] => Array[Byte]): DataFrame = {
-    val idx = df.schema.fieldIndex(valueCol)
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(SensorSchemas.sensorEventSchema)
-    df.mapPartitions { it =>
-      it.flatMap { r =>
-        // Null value = Kafka tombstone (compacted-topic delete marker):
-        // count-and-drop like any other undecodable record — one tombstone
-        // must not kill the stream (poison-message contract, app.go:85-97).
-        val bytes = r.getAs[Array[Byte]](idx)
-        if (bytes == null) {
-          malformed.foreach(_.add(1L))
-          None
-        } else
-          try Some(decodeSensorEvent(unframe(bytes)))
-          catch {
-            case _: MalformedRecord | _: ConfluentFraming.BadFrame =>
-              malformed.foreach(_.add(1L))
-              None
-          }
-      }
+      framed: Boolean,
+      malformed: Option[org.apache.spark.util.LongAccumulator]): DataFrame =
+    df.select(ColumnBridge.column(
+      DecodeSensorEvent(ColumnBridge.expression(df(valueCol)), framed, malformed)))
+
+  /** The decode as a Catalyst generator: binary value in, zero or one
+    * SensorEvent row out. A null value is a Kafka tombstone (compacted-topic
+    * delete marker) and is counted and dropped like any undecodable record.
+    * The decoder is built lazily in the task's own copy of the expression.
+    */
+  private[streaming] case class DecodeSensorEvent(
+      child: Expression,
+      framed: Boolean,
+      malformed: Option[org.apache.spark.util.LongAccumulator])
+      extends UnaryExpression with Generator with CodegenFallback {
+
+    override def checkInputDataTypes(): TypeCheckResult =
+      if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(s"$prettyName needs binary, got ${child.dataType.sql}")
+    override def elementSchema: StructType = SensorSchemas.sensorEventSchema
+    override def prettyName: String = "decode_sensor_event"
+
+    @transient private lazy val decoder = new Decoder
+
+    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+      val bytes = child.eval(input).asInstanceOf[Array[Byte]]
+      if (bytes == null) dropped()
+      else
+        try decoder.sensorEvent(bytes, if (framed) ConfluentFraming.payloadOffset(bytes) else 0) :: Nil
+        catch { case _: MalformedRecord | _: ConfluentFraming.BadFrame => dropped() }
     }
+
+    private def dropped(): Nil.type = {
+      malformed.foreach(_.add(1L))
+      Nil
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): DecodeSensorEvent =
+      copy(child = newChild)
   }
 
   // ---- encode (tests + sink symmetry) ------------------------------------
 
+  private def writeTag(out: WireBuffer, field: Int, wireType: Int): Unit =
+    out.writeVarint((field.toLong << 3) | wireType)
+
+  private def writeBytes(out: WireBuffer, field: Int, bytes: Array[Byte]): Unit = {
+    writeTag(out, field, 2); out.writeVarint(bytes.length.toLong); out.write(bytes)
+  }
+
   private def encodeMessage(row: Row, schema: StructType, fields: Map[Int, String]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
+    val out = new WireBuffer()
     val byName = fields.map(_.swap)
     schema.fields.zipWithIndex.foreach { case (f, i) =>
       if (!row.isNullAt(i)) {
         val fieldNum = byName(f.name)
         f.dataType match {
-          case StringType => writeString(out, fieldNum, row.getString(i))
-          case LongType   => writeTag(out, fieldNum, 0); writeVarint(out, row.getLong(i))
+          case StringType => writeBytes(out, fieldNum, row.getString(i).getBytes(StandardCharsets.UTF_8))
+          case LongType   => writeTag(out, fieldNum, 0); out.writeVarint(row.getLong(i))
           case ArrayType(m: StructType, _) =>
-            row.getSeq[Row](i).foreach { metric =>
-              val body = encodeMessage(metric, m, metricFields)
-              writeTag(out, fieldNum, 2); writeVarint(out, body.length)
-              out.write(body, 0, body.length)
-            }
+            row.getSeq[Row](i).foreach(metric => writeBytes(out, fieldNum, encodeMessage(metric, m, metricFields)))
           case other => throw new IllegalArgumentException(s"unsupported $other")
         }
       }

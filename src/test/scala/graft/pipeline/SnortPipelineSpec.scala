@@ -97,4 +97,21 @@ class SnortPipelineSpec extends SparkSpec {
     assert(h2headers("priorityStr") == "High")
     assert(h2headers("sensor_id") == "sensor-1")
   }
+
+  test("metadata timestamps and the priority label are computed per event, below the explode") {
+    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, DateFormatClass, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+    // an RDD source: over a local relation the optimizer would evaluate the
+    // per-event projection on the driver
+    val events = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(event("h1", Seq(metric("t"))))), SensorSchemas.sensorEventSchema)
+    val plan = SnortPipeline.alerts(events).queryExecution.optimizedPlan
+    val explode = plan.collectFirst { case g: Generate => g }.get
+    def count(p: LogicalPlan, f: Expression => Boolean): Int =
+      p.collect { case n => n.expressions.map(_.collect { case e if f(e) => e }.size).sum }.sum
+    val formats: Expression => Boolean = _.isInstanceOf[DateFormatClass]
+    val labels: Expression => Boolean = _.isInstanceOf[CaseWhen]
+    assert(count(plan, formats) == 3 && count(explode.child, formats) == 3)
+    assert(count(plan, labels) == 1 && count(explode.child, labels) == 1)
+  }
 }

@@ -133,6 +133,102 @@ class ProtobufWireSpec extends SparkSpec {
     assert(decoded2.getString(schema.fieldIndex("sensor_id")) == "")
   }
 
+  test("field numbers 0 and past int32 are malformed, not skipped or aliased") {
+    val schema = SensorSchemas.sensorEventSchema
+    def tagged(field: Long, value: Array[Byte]): Array[Byte] = {
+      val out = new WireBuffer()
+      out.writeVarint((field << 3) | 2); out.writeVarint(value.length.toLong); out.write(value)
+      out.toByteArray
+    }
+    val s1 = "s1".getBytes("UTF-8")
+    assert(ProtobufWire.decodeSensorEvent(tagged(5, s1)).getString(schema.fieldIndex("sensor_id")) == "s1")
+    // 2^32 + 5 truncated to an Int is 5: it must not land in sensor_id
+    intercept[ProtobufWire.MalformedRecord](ProtobufWire.decodeSensorEvent(tagged((1L << 32) + 5, s1)))
+    intercept[ProtobufWire.MalformedRecord](ProtobufWire.decodeSensorEvent(tagged(0, s1)))
+    intercept[ProtobufWire.MalformedRecord](ProtobufWire.decodeSensorEvent(Array[Byte](0, 1)))
+    intercept[ProtobufWire.MalformedRecord](ProtobufWire.decodeSensorEvent(tagged(Int.MaxValue + 1L, s1)))
+    // the largest int32 field number is an unknown field and is skipped
+    assert(ProtobufWire.decodeSensorEvent(tagged(Int.MaxValue, s1) ++ tagged(5, s1))
+      .getString(schema.fieldIndex("sensor_id")) == "s1")
+    // the same inside a metric fails the whole event, and both count as dropped
+    val badMetric = tagged(1, tagged(0, s1))
+    intercept[ProtobufWire.MalformedRecord](ProtobufWire.decodeSensorEvent(badMetric))
+    import spark.implicits._
+    val counter = ProtobufWire.malformedCounter(spark)
+    val df = Seq(tagged((1L << 32) + 5, s1), tagged(0, s1), badMetric, tagged(5, s1))
+      .map(withFrame).toDF("value")
+    val out = ProtobufWire.decodeFramed(df, "value", Some(counter))
+    assert(out.select($"sensor_id").as[String].collect().toSeq == Seq("s1"))
+    assert(counter.value == 3L)
+  }
+
+  test("invalid UTF-8 in a string field reads exactly as new String(bytes, UTF_8)") {
+    val schema = SensorSchemas.sensorEventSchema
+    val samples = GoldenFrames.InvalidUtf8 ++ Seq("ok", "日本", "🚨").map(_.getBytes("UTF-8")) ++
+      org.scalacheck.Gen.listOfN(400, org.scalacheck.Gen.containerOf[Array, Byte](
+        org.scalacheck.Gen.oneOf[Byte](Seq[Int](0x41, 0x7f, 0x80, 0xbf, 0xc0, 0xc2, 0xdf, 0xe0, 0xe6, 0xed,
+          0xef, 0xf0, 0xf4, 0xf5, 0xff, 0x9f, 0xa0, 0x90).map(_.toByte))))
+        .pureApply(org.scalacheck.Gen.Parameters.default, org.scalacheck.rng.Seed(11L))
+    samples.foreach { b =>
+      val out = new WireBuffer()
+      out.writeVarint((5L << 3) | 2); out.writeVarint(b.length.toLong); out.write(b)
+      val got = ProtobufWire.decodeSensorEvent(out.toByteArray).getString(schema.fieldIndex("sensor_id"))
+      assert(got == new String(b, "UTF-8"), b.map(x => f"${x & 0xff}%02x").mkString(" "))
+    }
+  }
+
+  test("decodeFramed keeps the SensorEvent schema, nullability included") {
+    import spark.implicits._
+    val df = Seq(withFrame(ProtobufWire.encodeSensorEvent(event("h", Seq(metric("t")))))).toDF("value")
+    assert(ProtobufWire.decodeFramed(df, "value").schema == SensorSchemas.sensorEventSchema)
+    assert(ProtobufWire.decode(df, "value").schema == SensorSchemas.sensorEventSchema)
+  }
+
+  test("payloadOffset agrees with parseHeader and stripBytes on every frame shape") {
+    val payload = Array[Byte](0x0a, 0x01, 0x41)
+    Seq(Seq(0), Seq(1, 0), Seq(3, 1, 4), Seq(200, 0)).foreach { idx =>
+      val framed = ConfluentFraming.header(9, idx) ++ payload
+      val (_, indexes, off) = ConfluentFraming.parseHeader(framed)
+      assert(indexes == idx)
+      assert(ConfluentFraming.payloadOffset(framed) == off)
+      assert(ConfluentFraming.stripBytes(framed).toSeq == payload.toSeq)
+    }
+    GoldenFrames.BadFrames.take(9).foreach { bad =>
+      intercept[ConfluentFraming.BadFrame](ConfluentFraming.payloadOffset(bad))
+    }
+  }
+
+  test("property: encodeSensorEvent → decode gives back the same rows") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    // strings of whole code points: a lone surrogate has no UTF-8 form
+    val text = Gen.oneOf(Gen.alphaNumStr, Gen.const(""),
+      Gen.listOf(Gen.choose(0, 0x10f7ff).map(c => if (c >= 0xd800) c + 0x800 else c))
+        .map(cs => new String(cs.toArray, 0, cs.length)))
+    val long = Gen.oneOf(Gen.long, Gen.choose(-300L, 300L), Gen.const(Long.MinValue))
+    def value(f: org.apache.spark.sql.types.StructField): Gen[Any] = {
+      val v: Gen[Any] = if (f.dataType == org.apache.spark.sql.types.StringType) text else long
+      if (f.nullable) Gen.frequency(1 -> Gen.const(null), 3 -> v) else v
+    }
+    def row(fields: Seq[org.apache.spark.sql.types.StructField], metrics: Gen[Any]): Gen[Row] =
+      Gen.sequence[List[Any], Any](fields.map(f => if (f.name == "metrics") metrics else value(f)))
+        .map(vs => Row.fromSeq(vs))
+    val metricRow = row(SensorSchemas.metricSchema.fields.toSeq, Gen.const(null))
+    val eventRow = row(SensorSchemas.sensorEventSchema.fields.toSeq,
+      Gen.choose(0, 4).flatMap(n => Gen.listOfN(n, metricRow)))
+    val prop = Prop.forAll(eventRow) { e =>
+      ProtobufWire.decodeSensorEvent(ProtobufWire.encodeSensorEvent(e)) == e
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(300).withInitialSeed(Seed(5L)), prop)
+    assert(result.passed, result.status)
+    // the same events through the DataFrame path, framed
+    val events = Gen.listOfN(200, eventRow).pureApply(Gen.Parameters.default, Seed(6L))
+    import spark.implicits._
+    val df = events.map(e => withFrame(ProtobufWire.encodeSensorEvent(e))).toDF("value")
+    val got = ProtobufWire.decodeFramed(df, "value").collect().toSeq
+    assert(got.sortBy(_.toString) == events.sortBy(_.toString))
+  }
+
   private def withFrame(payload: Array[Byte]): Array[Byte] =
     ConfluentFraming.header(17) ++ payload
   private def javaBytes(a: Array[Byte]): Array[Byte] = a
